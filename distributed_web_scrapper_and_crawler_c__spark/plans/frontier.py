@@ -47,7 +47,7 @@ from pyspark.sql.types import ArrayType
 from ..functions import expressions as X
 from ..functions import kernels as K
 from ..functions import udfs as U
-from .parallelize import local_df
+from .parallelize import driver_rows, forget_rows, local_df
 from . import bloom as BL
 from . import cuckoo as CK
 from . import seq as seq_mod
@@ -281,11 +281,11 @@ class CrawlEngine:
         self.dequeue_log: list[tuple] = []
         # Driver fast-round gate: a round whose ELIGIBLE FRONTIER fits in
         # ≤ fast_round_rows rows runs entirely driver-side (one fetch
-        # collect + one membership-probe job) instead of the ~20-job
-        # distributed round — see _run_round_fast. The reference workload's
-        # pagination chains (one `page-N` discovering one `page-N+1`,
-        # Crawler.cpp:135-317) make 1-URL rounds the common tail case; at
-        # 10^10 scale the gate simply never fires on real rounds, exactly
+        # collect, plus one membership-probe job past MIRROR_MAX_ROWS)
+        # instead of the ~20-job distributed round — see _run_round_fast.
+        # The reference workload's pagination chains (one `page-N`
+        # discovering one `page-N+1`, Crawler.cpp:135-317) make 1-URL
+        # rounds the common tail case; at 10^10 scale the gate simply never fires on real rounds, exactly
         # like seq.SMALL_SEQ_ROWS. 0 disables (always-distributed).
         # Default = 512, from a measured crossover on the sf0.1 bench site
         # (local[32], .work/fast_crossover.py): driver rounds win clearly
@@ -303,9 +303,9 @@ class CrawlEngine:
         # the distributed plan anyway — the table is driver-sized)
         self._robots_local: list[tuple] | None = None
         # exact driver mirrors of the seen canonicals / items canonical_urls
-        # (None = dead; see MIRROR_MAX_ROWS). Primed by seed(), updated by
-        # both round paths, killed when the state outgrows the cap or on
-        # resume (rebuild lazily via _ensure_mirrors when small).
+        # (None = dead; see MIRROR_MAX_ROWS). Primed by seed() and by a
+        # resume below the cap, updated by both round paths and add_seed,
+        # killed by _check_mirror_cap once the state outgrows the cap.
         self._seen_mirror: set | None = None
         self._items_mirror: set | None = None
 
@@ -347,7 +347,7 @@ class CrawlEngine:
     def _maybe_compact_parts(self) -> None:
         """Geometric in-memory compaction of the seen/items part unions.
 
-        seen/items accumulate one pinned (or LocalRelation) part per round,
+        seen/items accumulate one pinned (or ``local_df``) part per round,
         so every membership probe / anti-join scans len(parts) plan leaves
         and the driver re-analyzes an O(rounds)-node union each round —
         per-round cost grows with ROUNDS, not data (measured on a 12-round
@@ -373,7 +373,13 @@ class CrawlEngine:
         extra leaf crept the fast rounds' membership probe +0.3-0.5s
         (per-plan codegen/broadcast overhead, independent of leaf size).
         The doubling rule still governs big states, where repins are NOT
-        cheap and amortization matters."""
+        cheap and amortization matters.
+
+        When every part is driver-known (fast rounds, seed and resume below
+        MIRROR_MAX_ROWS build their parts with ``local_df``; past the cap
+        _check_mirror_cap drops those row copies) the fold is a driver-side
+        concatenation into one ``local_df`` — no Spark job, and the folded
+        frame stays driver-known for later folds and checkpoint writes."""
         if self.seen is not None and len(self._seen_parts) > 1:
             n = len(self._seen_parts)
             small = self.seen_count < SMALL_COMPACT_ROWS
@@ -381,8 +387,12 @@ class CrawlEngine:
                 n >= COMPACT_MIN_PARTS
                 and self.seen_count >= 2 * self._seen_last_compact
             ) or (small and n >= SMALL_COMPACT_PARTS):
-                folded = self.seen.coalesce(4) if small else self.seen
-                self.seen = self._pin(folded)
+                folded = self._local_union(self._seen_parts)
+                if folded is None:
+                    folded = self._pin(
+                        self.seen.coalesce(4) if small else self.seen
+                    )
+                self.seen = folded
                 self._seen_parts = [self.seen]
                 self._seen_last_compact = self.seen_count
         if len(self._item_parts) > 1:
@@ -392,10 +402,47 @@ class CrawlEngine:
                 n >= COMPACT_MIN_PARTS
                 and self.items_count >= 2 * self._items_last_compact
             ) or (small and n >= SMALL_COMPACT_PARTS):
-                folded = self.items.coalesce(4) if small else self.items
-                self.items = self._pin(folded)
+                folded = self._local_union(self._item_parts)
+                if folded is None:
+                    folded = self._pin(
+                        self.items.coalesce(4) if small else self.items
+                    )
+                self.items = folded
                 self._item_parts = [self.items]
                 self._items_last_compact = self.items_count
+
+    @staticmethod
+    def _known_rows(parts: list[DataFrame]) -> list[tuple] | None:
+        """The rows of ``parts`` in order when every part is driver-known,
+        else None (the caller falls back to Spark)."""
+        known = [driver_rows(p) for p in parts]
+        if not known or any(k is None for k in known):
+            return None
+        return [r for rows, _ in known for r in rows]
+
+    def _local_union(self, parts: list[DataFrame]) -> DataFrame | None:
+        """The union of ``parts`` as one driver-known ``local_df``, or None
+        when some part is not driver-known."""
+        if len(parts) == 1 and driver_rows(parts[0]) is not None:
+            return parts[0]
+        rows = self._known_rows(parts)
+        if rows is None:
+            return None
+        return local_df(self.spark, rows, driver_rows(parts[0])[1])
+
+    def _check_mirror_cap(self) -> bool:
+        """The one place MIRROR_MAX_ROWS is enforced, called after every
+        update of seen_count/items_count (seed, add_seed, both round
+        paths). Past the cap the exact mirrors die and the seen/items parts
+        drop their driver row copies, so every driver-held copy of the state
+        obeys the same bound; probes, folds and checkpoint writes then go
+        through Spark. Returns True when the mirrors are live."""
+        if self.seen_count + self.items_count > MIRROR_MAX_ROWS:
+            self._seen_mirror = None
+            self._items_mirror = None
+            for part in self._seen_parts + self._item_parts:
+                forget_rows(part)
+        return self._seen_mirror is not None and self._items_mirror is not None
 
     def _pin_shards(self, df: DataFrame) -> DataFrame:
         """Pin the sharded seen-filter state AND erase its inherited size
@@ -426,19 +473,20 @@ class CrawlEngine:
                 (i, p, url, K.canonicalize_url(url), K.url_host(url), -1, i,
                  0, 0)
             )
+        # seen keeps the first seq per canonical (duplicate start paths)
+        seen_rows: list[tuple] = []
+        seen_canons: set = set()
+        for (s, _p, _u, c, *_rest) in rows:
+            if c not in seen_canons:
+                seen_canons.add(c)
+                seen_rows.append((c, s, 0))
         front = local_df(self.spark, rows, FRONTIER_SCHEMA)
         if self.priority_expr is not None:
-            front = front.withColumn(
-                "priority", self.priority_expr.cast("int")
+            front = self._pin(
+                front.withColumn("priority", self.priority_expr.cast("int"))
             )
-        self.frontier = self._pin(front)
-        seed_seen = self._pin(
-            local_df(
-                self.spark,
-                [(c, s, 0) for (s, _p, _u, c, *_rest) in rows],
-                SEEN_SCHEMA,
-            ).dropDuplicates(["canonical"])
-        )
+        self.frontier = front
+        seed_seen = local_df(self.spark, seen_rows, SEEN_SCHEMA)
         self._seen_parts = [seed_seen]
         self.seen = seed_seen
         self.frontier_size = len(rows)
@@ -448,10 +496,11 @@ class CrawlEngine:
         self._frontier_local = (
             None if self.priority_expr is not None else list(rows)
         )
-        self._seen_mirror = {c for (_s, _p, _u, c, *_rest) in rows}
+        self._seen_mirror = seen_canons
         self._items_mirror = set()
         self.next_seq = len(rows)
-        self.seen_count = seed_seen.count()
+        self.seen_count = len(seen_rows)
+        self._check_mirror_cap()
         self._write_checkpoint()
         return self
 
@@ -506,16 +555,13 @@ class CrawlEngine:
             self._frontier_local.append(row[0])
         else:
             self._frontier_local = None
-        new_seen = self._pin(
-            local_df(
-                self.spark, [(canon, self.next_seq, self.round_num)],
-                SEEN_SCHEMA,
-            )
+        new_seen = local_df(
+            self.spark, [(canon, self.next_seq, self.round_num)], SEEN_SCHEMA
         )
         self._seen_parts.append(new_seen)
         self.seen = self.seen.unionByName(new_seen)
         self.seen_count += 1
-        if self._seen_mirror is not None:
+        if self._check_mirror_cap():
             self._seen_mirror.add(canon)
         if self.use_bloom and (
             self._bloom_bm is not None or self._bloom_shards is not None
@@ -536,8 +582,6 @@ class CrawlEngine:
         past capacity; otherwise it is OR-updated incrementally. Above
         ``bloom_shard_threshold`` seen-URLs the state is the sharded
         DataFrame layout (driver-held bitmap is dropped)."""
-        import numpy as np
-
         n = max(1, self.next_seq)
         if self.seen_filter == "cuckoo":
             if self._bloom_sharded:
@@ -557,7 +601,7 @@ class CrawlEngine:
                 return
             if self._bloom_bm is None or n * 2 > CK.capacity(self._bloom_m):
                 self._bloom_m = CK.next_pow2_buckets(4 * n)  # rebuilds rare
-                self._bloom_bm = CK.cuckoo_local(self.seen, "canonical", self._bloom_m)
+                self._bloom_bm = self._filter_from_seen()
                 self.bloom_rebuilds += 1
             return
         if self._bloom_sharded:
@@ -572,8 +616,7 @@ class CrawlEngine:
             return
         if self._bloom_bm is None or n * 16 > self._bloom_m:
             self._bloom_m = BL._next_pow2(n * 32)  # headroom: rebuilds are rare
-            bm, _ = BL.build_bloom(self.seen, "canonical", self._bloom_m)
-            self._bloom_bm = np.frombuffer(bm, dtype=np.uint8).copy()
+            self._bloom_bm = self._filter_from_seen()
             self.bloom_rebuilds += 1
 
     def _bloom_add(self, df: DataFrame, col: str, n_rows: int) -> None:
@@ -602,7 +645,7 @@ class CrawlEngine:
             else:
                 if self.seen_count * 2 > CK.capacity(self._bloom_m):
                     self._bloom_m = CK.next_pow2_buckets(4 * self.seen_count)
-                    self._bloom_bm = CK.cuckoo_local(self.seen, col, self._bloom_m)
+                    self._bloom_bm = self._filter_from_seen()
                     self.bloom_rebuilds += 1
                     return
                 CK.insert_local(self._bloom_bm, df, col)
@@ -688,9 +731,23 @@ class CrawlEngine:
 
     def _bloom_add_local(self, canonicals: list[str]) -> None:
         """_bloom_add twin for driver-known keys — zero Spark jobs on the
-        steady path; the rare cuckoo capacity rebuild still goes through
-        the DataFrame build (it reads the whole seen-set anyway). Callers
-        update seen/seen_count first, like _bloom_add's call sites."""
+        steady path. Callers update seen/seen_count first, like
+        _bloom_add's call sites, so a cuckoo capacity rebuild from the
+        seen-set already includes ``canonicals``."""
+        if not canonicals:
+            return
+        if self.seen_filter == "cuckoo":
+            if self.seen_count * 2 > CK.capacity(self._bloom_m):
+                self._bloom_m = CK.next_pow2_buckets(4 * self.seen_count)
+                self._bloom_bm = self._filter_from_seen()
+                self.bloom_rebuilds += 1
+                return
+        self._filter_insert_local(self._bloom_bm, canonicals)
+
+    def _filter_insert_local(self, table, canonicals: list[str]) -> None:
+        """Insert keys into a driver-held filter via the driver xxh64 twin,
+        bit-identical to the JVM-hashed builds (bloom: set k bits; cuckoo:
+        bulk insert in key order, as ``CK.cuckoo_local`` does)."""
         import numpy as np
 
         from ..functions import xxh64 as XX
@@ -698,49 +755,34 @@ class CrawlEngine:
         if not canonicals:
             return
         if self.seen_filter == "cuckoo":
-            if self.seen_count * 2 > CK.capacity(self._bloom_m):
-                self._bloom_m = CK.next_pow2_buckets(4 * self.seen_count)
-                self._bloom_bm = CK.cuckoo_local(
-                    self.seen, "canonical", self._bloom_m
-                )
-                self.bloom_rebuilds += 1
-                return
             hfp = XX.hash_str_array(canonicals, CK.FP_SEED)
             hix = XX.hash_str_array(canonicals, CK.IX_SEED)
-            fp, i1 = CK._fp_i1(hfp, hix, self._bloom_bm.shape[0])
-            CK.bulk_insert(self._bloom_bm, fp, i1)
+            fp, i1 = CK._fp_i1(hfp, hix, table.shape[0])
+            CK.bulk_insert(table, fp, i1)
             return
         h1 = XX.hash_str_array(canonicals)
         h2 = XX.hash_str_array(canonicals, 1)
         bits = BL._probe_bits(h1, h2, self._bloom_m).ravel()
-        np.bitwise_or.at(
-            self._bloom_bm, bits >> 3, (1 << (bits & 7)).astype(np.uint8)
-        )
+        np.bitwise_or.at(table, bits >> 3, (1 << (bits & 7)).astype(np.uint8))
 
-    def _ensure_mirrors(self) -> bool:
-        """(Re)build the exact driver mirrors when the state is small
-        enough (one tagged-union collect over the pinned state tables);
-        returns True when the mirrors are live. A dead mirror above
-        MIRROR_MAX_ROWS stays dead — the distributed probe path owns that
-        regime."""
-        if self._seen_mirror is not None and self._items_mirror is not None:
-            return True
-        if self.seen_count + self.items_count > MIRROR_MAX_ROWS:
-            return False
-        rows = (
-            self.seen.select(
-                F.col("canonical").alias("k"), F.lit("s").alias("src")
-            )
-            .unionByName(
-                self.items.select(
-                    F.col("canonical_url").alias("k"), F.lit("i").alias("src")
-                )
-            )
-            .collect()
-        )
-        self._seen_mirror = {r["k"] for r in rows if r["src"] == "s"}
-        self._items_mirror = {r["k"] for r in rows if r["src"] == "i"}
-        return True
+    def _filter_from_seen(self):
+        """A fresh driver-held filter of ``_bloom_m`` over the whole
+        seen-set: hashed on the driver when every seen part is driver-known,
+        else built by a Spark job from ``self.seen``."""
+        import numpy as np
+
+        known = self._known_rows(self._seen_parts)
+        if self.seen_filter == "cuckoo":
+            if known is None:
+                return CK.cuckoo_local(self.seen, "canonical", self._bloom_m)
+            table = CK.new_table(self._bloom_m)
+        else:
+            if known is None:
+                bm, _ = BL.build_bloom(self.seen, "canonical", self._bloom_m)
+                return np.frombuffer(bm, dtype=np.uint8).copy()
+            table = np.zeros(self._bloom_m // 8, dtype=np.uint8)
+        self._filter_insert_local(table, [r[0] for r in known])
+        return table
 
     def _membership_probe(
         self, seen_keys: list[str], item_keys: list[str]
@@ -783,17 +825,21 @@ class CrawlEngine:
     def _run_round_fast(self) -> bool:
         """Driver-side twin of run_round for sub-batch rounds.
 
-        Same observable semantics, two Spark jobs instead of ~20: (1) the
-        fetch — an isin-filter collect against the page store (the
-        distributed broadcast-join's degenerate case), (2) the combined
-        exact membership probe (_membership_probe). Parse/dedup/seq run on
-        the driver through the SAME pure-Python kernels the pandas UDFs
-        wrap (functions/kernels — fuzz-verified against the compiled
-        reference), sanitized at the same boundary (udfs._san); bloom and
-        cuckoo updates go through the xxh64 driver twin, bit-identical to
-        the JVM-hashed updates. State increments become LocalRelations —
-        leaf plans that need no localCheckpoint pin. Equivalence with the
-        distributed path is asserted per scenario in
+        Same observable semantics, one Spark job instead of ~20: the fetch
+        — an isin-filter collect against the page store (the distributed
+        broadcast-join's degenerate case). Below MIRROR_MAX_ROWS the exact
+        membership questions are set lookups in the driver mirrors; past
+        it they cost one more job, the combined probe (_membership_probe).
+        Parse/dedup/seq run on the driver through the SAME pure-Python
+        kernels the pandas UDFs wrap (functions/kernels — fuzz-verified
+        against the compiled reference), sanitized at the same boundary
+        (udfs._san); bloom and cuckoo updates go through the xxh64 driver
+        twin, bit-identical to the JVM-hashed updates. State increments
+        and the new frontier are ``local_df`` frames — parallelized-RDD
+        leaf plans that need no localCheckpoint pin and that record their
+        rows, so the round's checkpoint is written in-process
+        (sources/table_format.ParquetAdapter) with no write job.
+        Equivalence with the distributed path is asserted per scenario in
         tests/test_fast_rounds.py, and the goldens/differential fuzz run
         over whichever path the gate picks.
         """
@@ -1013,7 +1059,7 @@ class CrawlEngine:
         # driver mirrors when live (zero jobs — the common fast-round
         # case), else ONE combined probe job ----------------------------
         book_canons = sorted({w[6] for w in book_winners})
-        if self._ensure_mirrors():
+        if self._seen_mirror is not None:  # both mirrors live or both dead
             found_seen = {c for c in maybe_canons if c in self._seen_mirror}
             found_items = {
                 c for c in book_canons if c in self._items_mirror
@@ -1049,8 +1095,6 @@ class CrawlEngine:
         self._item_parts.append(new_items)
         self.items = self.items.unionByName(new_items)
         self.items_count += new_item_count
-        if self._items_mirror is not None:
-            self._items_mirror.update(r[4] for r in item_rows)
         mark("parse_books")
 
         # --- links: first-wins per canonical, drop seen, stamp seq ------
@@ -1087,7 +1131,8 @@ class CrawlEngine:
         self._seen_parts.append(new_seen)
         self.seen = self.seen.unionByName(new_seen)
         self.seen_count += n_new
-        if self._seen_mirror is not None:
+        if self._check_mirror_cap():
+            self._items_mirror.update(r[4] for r in item_rows)
             self._seen_mirror.update(c for (c, _s, _r) in new_seen_rows)
         if self.use_bloom and n_new:
             self._bloom_add_local([c for (c, _s, _r) in new_seen_rows])
@@ -1789,12 +1834,7 @@ class CrawlEngine:
         self._seen_parts.append(new_seen)
         self.seen = self.seen.unionByName(new_seen)  # lazy over pinned parts
         self.seen_count += n_new
-        mirrors_live = (
-            self._seen_mirror is not None
-            and self._items_mirror is not None
-            and self.seen_count + self.items_count <= MIRROR_MAX_ROWS
-        )
-        if mirrors_live:
+        if self._check_mirror_cap():
             # ONE tagged collect over the already-pinned increments feeds
             # the exact driver mirrors AND the local bloom update — the
             # old _bloom_add hashing job over the same rows disappears
@@ -1828,11 +1868,8 @@ class CrawlEngine:
                     self._bloom_add_local(new_canons)
                 else:
                     self._bloom_add(new_seen, "canonical", n_new)
-        else:
-            self._seen_mirror = None
-            self._items_mirror = None
-            if self.use_bloom and n_new:
-                self._bloom_add(new_seen, "canonical", n_new)
+        elif self.use_bloom and n_new:
+            self._bloom_add(new_seen, "canonical", n_new)
         mark("state_update")
 
         self.metrics.append(
@@ -1891,13 +1928,15 @@ class CrawlEngine:
             # full-seen snapshot becomes the new base: either an add_seed
             # removed rows (older increments stale) or the periodic
             # compact_every fold is due
-            tf.write(self.seen, str(d / "seen_inc"))
+            full = self._local_union(self._seen_parts)
+            tf.write(self.seen if full is None else full, str(d / "seen_inc"))
             self._seen_base_round = self.round_num
             self._seen_compacted = False
         else:
             tf.write(self._seen_parts[-1], str(d / "seen_inc"))
         if compact_due:
-            tf.write(self.items, str(d / "items_inc"))
+            full = self._local_union(self._item_parts)
+            tf.write(self.items if full is None else full, str(d / "items_inc"))
             self._items_base_round = self.round_num
         else:
             tf.write(self._item_parts[-1], str(d / "items_inc"))
@@ -2015,9 +2054,6 @@ class CrawlEngine:
                 eng._bloom_bm = np.frombuffer(
                     (d / "bloom_bitmap.bin").read_bytes(), dtype=np.uint8
                 ).copy()
-        eng._seen_parts = [eng.seen]
-        eng._item_parts = [eng.items]
-        eng.frontier_size = eng.frontier.count()
         eng.round_num = state["round"]
         eng.next_seq = state["next_seq"]
         eng.pages_crawled = state["pages_crawled"]
@@ -2025,6 +2061,12 @@ class CrawlEngine:
         eng.seen_count = state.get("seen_count", -1)
         if eng.seen_count < 0:
             eng.seen_count = eng.seen.count()
+        if eng.seen_count + eng.items_count <= MIRROR_MAX_ROWS:
+            eng._load_driver_state()
+        else:
+            eng.frontier_size = eng.frontier.count()
+        eng._seen_parts = [eng.seen]
+        eng._item_parts = [eng.items]
         eng._seen_base_round = seen_base
         eng._items_base_round = items_base
         eng._host_last_round = {
@@ -2033,6 +2075,25 @@ class CrawlEngine:
         eng.stopped = state["stopped"]
         eng.metrics = [RoundMetrics(**m) for m in state["metrics"]]
         return eng
+
+    def _load_driver_state(self) -> None:
+        """Resume below MIRROR_MAX_ROWS: collect the read-back frontier,
+        seen and items once each and rebuild them as driver-known
+        ``local_df`` frames, priming the fast-round frontier rows and the
+        exact mirrors. Later folds, probes and checkpoint writes of this
+        state then need no Spark job, as in an uninterrupted crawl. Every
+        frontier canonical is in seen, so the frontier is bounded by the
+        same cap (up to duplicate start paths)."""
+        front = [tuple(r) for r in self.frontier.collect()]
+        seen = [tuple(r) for r in self.seen.collect()]
+        items = [tuple(r) for r in self.items.collect()]
+        self.frontier = local_df(self.spark, front, FRONTIER_SCHEMA)
+        self.seen = local_df(self.spark, seen, SEEN_SCHEMA)
+        self.items = local_df(self.spark, items, ITEMS_SCHEMA)
+        self.frontier_size = len(front)
+        self._frontier_local = None if self.priority_expr is not None else front
+        self._seen_mirror = {r[0] for r in seen}
+        self._items_mirror = {r[4] for r in items}
 
     # ---------------------------------------------------------------- outputs
 

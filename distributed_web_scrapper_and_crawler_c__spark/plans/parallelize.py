@@ -19,7 +19,7 @@ deterministic sort-before-repartition).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def spread(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -44,11 +44,33 @@ def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     touches it (measured: pinning a 2k-row frame 1.57s at 32 slices vs
     0.18s at one). Driver-known lists are bounded (fast-round gate /
     small-state compaction), so one slice per 50k rows keeps big lists
-    parallel while collapsing the common tiny case to a single task."""
+    parallel while collapsing the common tiny case to a single task.
+
+    The returned frame also carries a tuple copy of ``rows`` and the
+    ``schema`` string (read back with :func:`driver_rows`), so consumers
+    that only need the values — a checkpoint write, a fold of several such
+    frames — can skip the Spark job. The copy is taken here, so a caller
+    that keeps mutating its list never changes what the frame records."""
+    rows = tuple(rows)
     n_slices = max(1, min(
         -(-len(rows) // 50_000),
         spark.sparkContext.defaultParallelism,
     ))
-    return spark.createDataFrame(
+    df = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n_slices), schema
     )
+    df.__dict__["_driver_rows"] = (rows, schema)
+    return df
+
+
+def driver_rows(df: DataFrame) -> tuple[tuple, str] | None:
+    """``(rows, schema)`` recorded by :func:`local_df` on exactly this frame,
+    or None. Any transformation returns a new frame that records nothing,
+    so a hit always describes the frame's whole contents."""
+    return df.__dict__.get("_driver_rows")
+
+
+def forget_rows(df: DataFrame) -> None:
+    """Drop the driver copy recorded on ``df``; it stays a valid frame over
+    the same parallelized rows, and consumers go back to Spark jobs."""
+    df.__dict__.pop("_driver_rows", None)

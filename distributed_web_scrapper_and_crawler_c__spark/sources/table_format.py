@@ -10,6 +10,14 @@ rewrite of history), so the swap buys ACID commits, snapshot time-travel
 over rounds, and storage-partitioned joins against the page store without
 touching plans/frontier.py.
 
+The engine calls only ``write``, ``read`` and ``exists``, so a wrapper
+around an adapter (tracing, metering, a different store) needs those three
+and nothing else. Most checkpoint frames are ones the driver built itself
+from a fast round, a seed or a small-state fold (``plans.parallelize.
+local_df``); ``ParquetAdapter`` writes those in-process with
+``pyarrow.parquet`` instead of launching a Spark write job for a few KB of
+rows. Every other frame is written by a Spark job.
+
 Reference parity note: the reference keeps all crawl state in memory and
 persists nothing until shutdown, when it writes the result CSVs
 (server.cpp:583-675; signal path server.cpp:1101-1140) — it has no
@@ -20,6 +28,8 @@ reference lacks (SURVEY §2.5 Q5 reassign-on-loss → resumable rounds).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..plans.parallelize import driver_rows
 
 
 class TableFormatAdapter:
@@ -45,12 +55,24 @@ class TableFormatAdapter:
 
 class ParquetAdapter(TableFormatAdapter):
     """Parquet-directory implementation (the sandbox default): one
-    directory per (round, table) snapshot, overwrite-idempotent."""
+    directory per (round, table) snapshot, overwrite-idempotent.
+
+    A driver-known frame (one ``local_df`` built and recorded its rows on)
+    is written in-process: the location is cleared, then one part file and
+    a ``_SUCCESS`` marker are written — the layout and overwrite semantics
+    of Spark's own write, with no Spark job. Any other frame, and a schema
+    with a type outside ``_ARROW_TYPES``, goes through
+    ``df.write.mode("overwrite").parquet``."""
 
     name = "parquet"
 
     def write(self, df: DataFrame, loc: str) -> None:
-        df.write.mode("overwrite").parquet(loc)
+        known = driver_rows(df)
+        arrow_schema = _arrow_schema(known[1]) if known else None
+        if arrow_schema is None:
+            df.write.mode("overwrite").parquet(loc)
+            return
+        _write_local(known[0], arrow_schema, loc)
 
     def read(self, spark: SparkSession, schema: str, locs: list[str]) -> DataFrame:
         return spark.read.schema(schema).parquet(*locs)
@@ -59,6 +81,54 @@ class ParquetAdapter(TableFormatAdapter):
         from pathlib import Path
 
         return Path(loc).exists()
+
+
+# the DDL types of the checkpoint schemas, as pyarrow type factory names;
+# a schema with any other type is written by Spark
+_ARROW_TYPES = {
+    "string": "string", "long": "int64", "int": "int32", "double": "float64",
+}
+
+
+def _arrow_schema(schema: str):
+    """The pyarrow schema of a flat ``"name type, ..."`` DDL string, or None
+    when a field's type is not in ``_ARROW_TYPES``. Fields are nullable,
+    like every column Spark writes from a DataFrame."""
+    fields = []
+    for part in schema.split(","):
+        name, _, typ = part.strip().partition(" ")
+        factory = _ARROW_TYPES.get(typ.strip())
+        if factory is None:
+            return None
+        fields.append((name, factory))
+    import pyarrow as pa
+
+    return pa.schema([(n, getattr(pa, f)()) for n, f in fields])
+
+
+def _write_local(rows: tuple, arrow_schema, loc: str) -> None:
+    import shutil
+    import uuid
+    from pathlib import Path
+
+    import pyarrow as pa
+    # imported on the first driver-side write, so a run that writes no
+    # checkpoint never loads the parquet writer (~7 MB of driver RSS)
+    import pyarrow.parquet as pq
+
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    out = Path(loc)
+    shutil.rmtree(out, ignore_errors=True)
+    out.mkdir(parents=True)
+    pq.write_table(
+        table, out / f"part-00000-{uuid.uuid4()}-c000.snappy.parquet",
+        compression="snappy",
+    )
+    (out / "_SUCCESS").write_bytes(b"")
 
 
 class IcebergAdapter(TableFormatAdapter):

@@ -18,10 +18,15 @@ from distributed_web_scrapper_and_crawler_c__spark.sources import sitegen
 WORK = Path(__file__).resolve().parent.parent / ".work"
 SRC = WORK / "ref_crawl_harness.cpp"
 BIN = WORK / "ref_crawl_harness"
+# the unmodified reference checkout, a sibling of this repository; the
+# harness is compiled against its sources
+REF_SRC = Path(__file__).resolve().parent.parent.parent / "reference" / "src"
 
 pytestmark = pytest.mark.skipif(
-    shutil.which("g++") is None or not SRC.exists(),
-    reason="needs g++ and the harness source",
+    shutil.which("g++") is None
+    or not SRC.exists()
+    or not any(REF_SRC.glob("*.cpp")),
+    reason="needs g++, the harness source and the reference sources",
 )
 
 
@@ -30,8 +35,7 @@ def harness() -> Path:
     if not BIN.exists() or BIN.stat().st_mtime < SRC.stat().st_mtime:
         subprocess.run(
             ["g++", "-std=c++17", "-O1", "-o", str(BIN), str(SRC),
-             "/root/reference/src/Crawler.cpp",
-             "/root/reference/src/HtmlParser.cpp"],
+             str(REF_SRC / "Crawler.cpp"), str(REF_SRC / "HtmlParser.cpp")],
             check=True,
         )
     return BIN

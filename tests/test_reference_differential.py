@@ -21,10 +21,15 @@ from distributed_web_scrapper_and_crawler_c__spark.functions import kernels as K
 WORK = Path(__file__).resolve().parent.parent / ".work"
 HARNESS_SRC = WORK / "ref_harness.cpp"
 HARNESS_BIN = WORK / "ref_harness"
+# the unmodified reference checkout, a sibling of this repository; the
+# harness is compiled against its sources
+REF_SRC = Path(__file__).resolve().parent.parent.parent / "reference" / "src"
 
 pytestmark = pytest.mark.skipif(
-    shutil.which("g++") is None or not HARNESS_SRC.exists(),
-    reason="needs g++ and the harness source",
+    shutil.which("g++") is None
+    or not HARNESS_SRC.exists()
+    or not any(REF_SRC.glob("*.cpp")),
+    reason="needs g++, the harness source and the reference sources",
 )
 
 
@@ -33,7 +38,7 @@ def ref():
     if not HARNESS_BIN.exists() or HARNESS_BIN.stat().st_mtime < HARNESS_SRC.stat().st_mtime:
         subprocess.run(
             ["g++", "-std=c++17", "-O1", "-o", str(HARNESS_BIN), str(HARNESS_SRC),
-             "/root/reference/src/HtmlParser.cpp"],
+             str(REF_SRC / "HtmlParser.cpp")],
             check=True,
         )
     proc = subprocess.Popen(

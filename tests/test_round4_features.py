@@ -383,7 +383,9 @@ def test_pin_storage_level_serialized(spark, pages, pages_map, monkeypatch):
         return orig(self, eager=eager, storageLevel=storageLevel)
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
-    eng = _run(spark, pages,
+    # distributed rounds: driver-built fast-round state is never pinned,
+    # so an all-fast crawl of this site would record no pin at all
+    eng = _run(spark, pages, fast_round_rows=0,
                pin_storage_level=StorageLevel.MEMORY_AND_DISK)
     res = crawl_oracle.crawl(pages_map)
     assert eng.crawl_order() == res.crawl_order
