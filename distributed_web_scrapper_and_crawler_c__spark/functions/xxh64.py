@@ -2,9 +2,18 @@
 
 The seen-filter state (plans/bloom, plans/cuckoo) hashes keys JVM-side with
 ``F.xxhash64`` so the hot path never leaves the JVM. The driver fast-round
-path (plans/frontier, sub-batch rounds) needs the SAME hash values for a
-handful of keys without launching a Spark job — this module computes them
-in Python.
+path (plans/frontier, rounds under the fast-round gate) needs the SAME hash
+values for its keys — up to tens of thousands of candidate links a round —
+without launching a Spark job; this module computes them in Python, in two
+forms:
+
+- the scalar reference, :func:`spark_xxhash64_str`, a line-by-line XXH64;
+- the batch form the engine calls, :func:`hash_str_array`: numpy runs each
+  XXH64 step for a whole block of strings at once (strings zero-padded into
+  one byte matrix read as little-endian words, every step masked to the
+  rows whose length takes it). A string is hashed once; an int-literal
+  child folds onto that hash (:func:`fold_int_array`) instead of rehashing
+  the string.
 
 Algorithm: XXH64 (Yann Collet's public xxHash, BSD) exactly as Spark SQL
 evaluates it:
@@ -15,7 +24,7 @@ evaluates it:
 - an int child (e.g. ``F.lit(1)``) takes the 4-byte specialization;
 - a long child takes the 8-byte specialization.
 
-Byte-equality with the JVM expression is asserted by fuzz in
+Byte-equality of both forms with the JVM expression is asserted by fuzz in
 ``tests/test_fast_rounds.py`` (test_xxh64_matches_spark_expression) — the
 bloom/cuckoo bitmaps a fast round updates must be bit-identical to the
 ones a distributed round would produce.
@@ -117,12 +126,121 @@ def spark_xxhash64_str(s: str, *int_children: int) -> int:
     return h
 
 
+# ------------------------------------------------------------- batch form
+
+# strings hashed per numpy block, taken in byte-length order so a block's
+# padded byte matrix stays close to the bytes it holds
+_BLOCK = 2048
+
+_U = np.uint64
+_NP1, _NP2, _NP3, _NP4, _NP5 = _U(_P1), _U(_P2), _U(_P3), _U(_P4), _U(_P5)
+
+
+def _rotl_v(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << _U(r)) | (x >> _U(64 - r))
+
+
+def _round_v(acc: np.ndarray, inp: np.ndarray) -> np.ndarray:
+    return _rotl_v(acc + inp * _NP2, 31) * _NP1
+
+
+def _fmix_v(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> _U(33))
+    h = h * _NP2
+    h = h ^ (h >> _U(29))
+    h = h * _NP3
+    return h ^ (h >> _U(32))
+
+
+def _gather(words: np.ndarray, idx: np.ndarray) -> np.ndarray:
+    """``words[row, idx[row]]`` per row; rows whose index runs past the
+    padded width read the last word (their result is masked out)."""
+    idx = np.minimum(idx, words.shape[1] - 1)
+    return words[np.arange(len(idx)), idx].astype(np.uint64)
+
+
+def _xxh64_block(data: list[bytes], lens: np.ndarray, seed: int) -> np.ndarray:
+    """:func:`xxh64_bytes` over one block: the strings are zero-padded into
+    one byte matrix read as little-endian words, and each step of the
+    scalar routine runs for every row at once, masked to the rows whose
+    length takes it."""
+    m = len(data)
+    width = max(8, (int(lens.max()) + 7) // 8 * 8)
+    buf = np.frombuffer(
+        b"".join(d.ljust(width, b"\0") for d in data), dtype=np.uint8
+    ).reshape(m, width)
+    w8 = buf.view("<u8")
+    w4 = buf.view("<u4")
+    n = lens.astype(np.uint64)
+
+    stripes = lens // 32
+    h = np.full(m, (seed + _P5) & _M, dtype=np.uint64)
+    if stripes.max() > 0:
+        v = [
+            np.full(m, x & _M, dtype=np.uint64)
+            for x in (seed + _P1 + _P2, seed + _P2, seed, seed - _P1)
+        ]
+        for s in range(int(stripes.max())):
+            live = stripes > s
+            for j in range(4):
+                np.copyto(v[j], _round_v(v[j], w8[:, 4 * s + j]), where=live)
+        hs = _rotl_v(v[0], 1) + _rotl_v(v[1], 7) + _rotl_v(v[2], 12) + _rotl_v(v[3], 18)
+        zero = np.zeros(m, dtype=np.uint64)
+        for x in v:
+            hs = (hs ^ _round_v(zero, x)) * _NP1 + _NP4
+        h = np.where(stripes > 0, hs, h)
+    h = h + n
+
+    pos = stripes * 32  # byte offset of the tail
+    n8 = (lens - pos) // 8
+    for k in range(3):
+        live = n8 > k
+        if not live.any():
+            break
+        w = _gather(w8, pos // 8 + k)
+        np.copyto(h, _rotl_v(h ^ _round_v(np.zeros(m, np.uint64), w), 27) * _NP1 + _NP4, where=live)
+    pos = pos + 8 * n8
+    has4 = lens - pos >= 4
+    if has4.any():
+        w = _gather(w4, pos // 4)
+        np.copyto(h, _rotl_v(h ^ (w * _NP1), 23) * _NP2 + _NP3, where=has4)
+        pos = pos + 4 * has4
+    for k in range(3):
+        live = lens - pos > k
+        if not live.any():
+            break
+        b = _gather(buf, pos + k)
+        np.copyto(h, _rotl_v(h ^ (b * _NP5), 11) * _NP1, where=live)
+    return _fmix_v(h)
+
+
+def fold_int_array(h: np.ndarray, value: int) -> np.ndarray:
+    """:func:`xxh64_int` of one int literal seeded by each running hash —
+    the next step of Spark's child fold, so ``F.xxhash64(col, F.lit(v))``
+    is ``fold_int_array(hash_str_array(col), v)``."""
+    k = _U(((value & 0xFFFFFFFF) * _P1) & _M)
+    x = (h + _U((_P5 + 4) & _M)) ^ k
+    return _fmix_v(_rotl_v(x, 23) * _NP2 + _NP3)
+
+
 def hash_str_array(strings, *int_children: int) -> np.ndarray:
-    """Vectorize :func:`spark_xxhash64_str` over a sequence — returns a
-    uint64 array shaped for the numpy bitmap/table kernels in plans/bloom
-    and plans/cuckoo (they ``.view(np.uint64)`` Spark's signed output; this
-    is already the unsigned view)."""
-    out = np.empty(len(strings), dtype=np.uint64)
-    for j, s in enumerate(strings):
-        out[j] = spark_xxhash64_str(s, *int_children)
+    """:func:`spark_xxhash64_str` over a sequence, bit for bit, as a uint64
+    array shaped for the numpy bitmap/table kernels in plans/bloom and
+    plans/cuckoo (they ``.view(np.uint64)`` Spark's signed output; this is
+    already the unsigned view). Each string is hashed once, in blocks of
+    ``_BLOCK`` strings of similar length; int children fold onto the
+    string hash through :func:`fold_int_array`."""
+    n = len(strings)
+    out = np.empty(n, dtype=np.uint64)
+    # character length orders the blocks; only the padding depends on it
+    order = np.argsort(
+        np.fromiter(map(len, strings), dtype=np.int64, count=n), kind="stable"
+    )
+    for lo in range(0, n, _BLOCK):
+        idx = order[lo : lo + _BLOCK]
+        data = [strings[i].encode("utf-8") for i in idx]
+        lens = np.fromiter(map(len, data), dtype=np.int64, count=len(data))
+        out[idx] = _xxh64_block(data, lens, SPARK_DEFAULT_SEED)
+    for c in int_children:
+        out = fold_int_array(out, c)
     return out

@@ -366,9 +366,10 @@ def near_dup_pipeline(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     pipeline bounds the exact computation by the LSH bucket collisions).
 
     Returns (doc_a, doc_b, jaccard) for candidate pairs with
-    jaccard ≥ threshold (callers pass threshold > 0: a pair with an empty
-    intersection is identically "below threshold" whether the edge is
-    absent, as in the old exploded-join form, or present with jaccard 0).
+    jaccard ≥ threshold. Every candidate shares at least one shingle: equal
+    band values mean equal minima md5("<j>:"+shingle), so the minimizing
+    shingle is common to both docs. No pair has jaccard 0, and at
+    threshold ≤ 0 the edges are still exactly :func:`near_dup_pipeline_sql`'s.
 
     Shape (guide §2.3/§2.4): the per-doc DISTINCT shingle SET is computed
     once as an array column (:func:`doc_shingle_arrays`, no explode) and

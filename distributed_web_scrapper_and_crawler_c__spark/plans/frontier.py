@@ -35,7 +35,9 @@ Scale design (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import json
+import os
 import time
+from collections import deque
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -47,6 +49,7 @@ from pyspark.sql.types import ArrayType
 from ..functions import expressions as X
 from ..functions import kernels as K
 from ..functions import udfs as U
+from ..functions import xxh64 as XX
 from .parallelize import driver_rows, forget_rows, local_df
 from . import bloom as BL
 from . import cuckoo as CK
@@ -107,6 +110,39 @@ ITEMS_SCHEMA = (
 )
 
 
+def _sql_str_literal(s: str) -> str:
+    """``s`` as a Spark SQL string literal that parses back to ``s``:
+    ``\\`` and ``'`` are backslash-escaped, and ``$`` is written as the
+    ``\\u0024`` escape so the parser's ``${...}`` variable substitution,
+    which runs on the raw text first, never sees one."""
+    return "'" + (
+        s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    ) + "'"
+
+
+class _PhaseClock:
+    """A round's phase walls: each mark records the ms since the previous
+    mark on the same clock. ``dmark`` adds the profiling-only sub-marks
+    (SPARK_PHASE_DETAIL=1), which split the coarse phases at each
+    materialization boundary; they are off by default so the phase tables
+    keep their stable 5-phase shape. A clock is driven by one thread: a
+    round's pool worker keeps its own, merged after its result is joined."""
+
+    def __init__(self, start: float):
+        self.ms: dict[str, float] = {}
+        self._last = start
+        self.detail = os.environ.get("SPARK_PHASE_DETAIL") == "1"
+
+    def mark(self, name: str) -> None:
+        now = time.time()
+        self.ms[name] = round((now - self._last) * 1000, 1)
+        self._last = now
+
+    def dmark(self, name: str) -> None:
+        if self.detail:
+            self.mark(name)
+
+
 @dataclass
 class RoundMetrics:
     round: int
@@ -152,7 +188,7 @@ class CrawlEngine:
         compact_every: int = 0,
         priority_expr=None,
         seen_filter: str = "bloom",
-        fast_round_rows: int = 512,
+        fast_round_rows: int = 4096,
     ):
         self.spark = spark
         self.pages = pages.select("url", "html")
@@ -285,15 +321,18 @@ class CrawlEngine:
         # instead of the ~20-job distributed round — see _run_round_fast.
         # The reference workload's pagination chains (one `page-N`
         # discovering one `page-N+1`, Crawler.cpp:135-317) make 1-URL
-        # rounds the common tail case; at 10^10 scale the gate simply never fires on real rounds, exactly
-        # like seq.SMALL_SEQ_ROWS. 0 disables (always-distributed).
-        # Default = 512, from a measured crossover on the sf0.1 bench site
-        # (local[32], .work/fast_crossover.py): driver rounds win clearly
-        # below ~500 rows (1-row tail: ~1.2s vs ~3.9s; 260 rows: ~3.5s vs
-        # ~6.5s), reach parity around ~1.5k mixed rows, and the driver
-        # parse of a listing-heavy 1k+ round (~7ms/page single-threaded)
-        # would lose to the distributed plan — 512 keeps the win with
-        # margin for listing-heavy mixes.
+        # rounds the common tail case; at 10^10 scale the gate never fires
+        # on real rounds, exactly like seq.SMALL_SEQ_ROWS. 0 disables
+        # (always-distributed).
+        # Default = 4096, from the crossover sweep measured at local[4]
+        # (`bench_extra.py --crossover`, recorded in BENCH/CROSSOVER.md):
+        # the driver round won at every round size of both sweep sites,
+        # the book-heavy one and the one with ~800 KB category pages.
+        # 4096 covers the bench drain's largest round (2356 rows) and
+        # bounds one fetch to 4096 pages. A row gate does not bound the
+        # fetched HTML bytes, so a larger value needs a heavy-page
+        # measurement first. The earlier 512 came from a local[32] sweep
+        # (round 6) that is not re-measured here.
         self.fast_round_rows = fast_round_rows
         # driver mirror of the frontier rows (FRONTIER_SCHEMA order) —
         # populated by seed()/fast rounds, dropped (None) whenever the
@@ -710,22 +749,31 @@ class CrawlEngine:
             ]
         return self._frontier_local
 
+    def _filter_hashes(self, canonicals: list[str]):
+        """The seen filter's two JVM hash columns for driver-known keys, via
+        the batch xxh64 twin (functions/xxh64): bloom (h1, h2) =
+        (xxhash64(c), xxhash64(c, 1)), cuckoo (hfp, hix) = (xxhash64(c,
+        FP_SEED), xxhash64(c, IX_SEED)). Each key's string is hashed once and
+        the int literal folds onto that base, as Spark's child fold does."""
+        base = XX.hash_str_array(canonicals)
+        if self.seen_filter == "cuckoo":
+            return (
+                XX.fold_int_array(base, CK.FP_SEED),
+                XX.fold_int_array(base, CK.IX_SEED),
+            )
+        return base, XX.fold_int_array(base, 1)
+
     def _bloom_probe_local(self, canonicals: list[str]):
         """Maybe-seen flags over the LOCAL filter state via the driver
-        xxh64 twin (functions/xxh64) — bit-identical to the JVM probe
-        (bloom: all-k-bits-set; cuckoo: fingerprint in either bucket)."""
+        xxh64 twin — bit-identical to the JVM probe (bloom:
+        all-k-bits-set; cuckoo: fingerprint in either bucket)."""
         import numpy as np
 
-        from ..functions import xxh64 as XX
-
+        ha, hb = self._filter_hashes(canonicals)
         if self.seen_filter == "cuckoo":
-            hfp = XX.hash_str_array(canonicals, CK.FP_SEED)
-            hix = XX.hash_str_array(canonicals, CK.IX_SEED)
-            fp, i1 = CK._fp_i1(hfp, hix, self._bloom_bm.shape[0])
+            fp, i1 = CK._fp_i1(ha, hb, self._bloom_bm.shape[0])
             return CK.bulk_probe(self._bloom_bm, fp, i1)
-        h1 = XX.hash_str_array(canonicals)
-        h2 = XX.hash_str_array(canonicals, 1)
-        bits = BL._probe_bits(h1, h2, self._bloom_m)
+        bits = BL._probe_bits(ha, hb, self._bloom_m)
         masks = (1 << (bits & 7)).astype(np.uint8)
         return ((self._bloom_bm[bits >> 3] & masks) == masks).all(axis=1)
 
@@ -750,19 +798,14 @@ class CrawlEngine:
         bulk insert in key order, as ``CK.cuckoo_local`` does)."""
         import numpy as np
 
-        from ..functions import xxh64 as XX
-
         if not canonicals:
             return
+        ha, hb = self._filter_hashes(canonicals)
         if self.seen_filter == "cuckoo":
-            hfp = XX.hash_str_array(canonicals, CK.FP_SEED)
-            hix = XX.hash_str_array(canonicals, CK.IX_SEED)
-            fp, i1 = CK._fp_i1(hfp, hix, table.shape[0])
+            fp, i1 = CK._fp_i1(ha, hb, table.shape[0])
             CK.bulk_insert(table, fp, i1)
             return
-        h1 = XX.hash_str_array(canonicals)
-        h2 = XX.hash_str_array(canonicals, 1)
-        bits = BL._probe_bits(h1, h2, self._bloom_m).ravel()
+        bits = BL._probe_bits(ha, hb, self._bloom_m).ravel()
         np.bitwise_or.at(table, bits >> 3, (1 << (bits & 7)).astype(np.uint8))
 
     def _filter_from_seen(self):
@@ -822,43 +865,104 @@ class CrawlEngine:
             {r["k"] for r in rows if r["src"] == "i"},
         )
 
+    def _fetch_pages(self, urls: list[str]) -> dict:
+        """url → (html, _pid) for the page-store rows of ``urls``: ONE Spark
+        job (the distributed broadcast fetch-join's degenerate case). The
+        filter is a single SQL IN-list, so it reaches the JVM in one py4j
+        call where ``Column.isin`` pays one per literal; OptimizeIn still
+        plans it as an InSet. _pid is computed with the SAME expression
+        repartition(n, url) places by (pmod(murmur3(url), n)), so lineage
+        counts match the distributed parse stage exactly."""
+        if not urls:
+            return {}
+        if self.spark.conf.get(
+            "spark.sql.parser.escapedStringLiterals", "false"
+        ) == "true":
+            # literals are taken verbatim: no escape can quote a ' inside
+            cond = F.col("url").isin(urls)
+        else:
+            cond = F.expr(
+                "url IN (" + ", ".join(map(_sql_str_literal, urls)) + ")"
+            )
+        rows = (
+            self.pages.filter(cond)
+            .select(
+                "url", "html",
+                F.pmod(F.hash(F.col("url")), F.lit(self.n_part))
+                .cast("int")
+                .alias("_pid"),
+            )
+            .collect()
+        )
+        return {r[0]: (r[1], r[2]) for r in rows}
+
+    def _robots_blocked_local(self):
+        """(link, path) → True when the robots rules block the link: the
+        driver twin of the distributed robots plans, or None without
+        rules. The rules table is collected once per engine (it broadcasts
+        in the distributed plan anyway — driver-sized)."""
+        if self.robots_rules is None:
+            return None
+        if self._robots_local is None:
+            if self._robots_full:
+                # host → [(pattern, allow)] for the pure longest-match
+                # kernel (robots_allowed) — the driver twin of the
+                # distributed robots_allowed_col plan
+                from collections import defaultdict
+
+                by_host: dict = defaultdict(list)
+                for rr in self.robots_rules.collect():
+                    by_host[rr["host"]].append((rr["pattern"], rr["allow"]))
+                self._robots_local = [("__full__", dict(by_host))]
+            else:
+                self._robots_local = [
+                    (rr["host"], rr["prefix"])
+                    for rr in self.robots_rules.collect()
+                ]
+        if self._robots_full:
+            from ..sources.robots import robots_allowed
+
+            full = self._robots_local[0][1]
+            return lambda link, path: not robots_allowed(
+                full.get(K.url_host(link), []), path
+            )
+        rules = self._robots_local
+
+        def blocked(link: str, path: str) -> bool:
+            host = K.url_host(link)
+            return any(
+                host == rh and path.startswith(rp) for rh, rp in rules
+            )
+
+        return blocked
+
     def _run_round_fast(self) -> bool:
-        """Driver-side twin of run_round for sub-batch rounds.
+        """Driver-side twin of run_round for rounds under the gate.
 
         Same observable semantics, one Spark job instead of ~20: the fetch
-        — an isin-filter collect against the page store (the distributed
-        broadcast-join's degenerate case). Below MIRROR_MAX_ROWS the exact
-        membership questions are set lookups in the driver mirrors; past
-        it they cost one more job, the combined probe (_membership_probe).
-        Parse/dedup/seq run on the driver through the SAME pure-Python
-        kernels the pandas UDFs wrap (functions/kernels — fuzz-verified
-        against the compiled reference), sanitized at the same boundary
-        (udfs._san); bloom and cuckoo updates go through the xxh64 driver
-        twin, bit-identical to the JVM-hashed updates. State increments
-        and the new frontier are ``local_df`` frames — parallelized-RDD
-        leaf plans that need no localCheckpoint pin and that record their
-        rows, so the round's checkpoint is written in-process
+        (_fetch_pages — one SQL IN-list filter of the page store, collected).
+        Below MIRROR_MAX_ROWS the exact membership questions are set
+        lookups in the driver mirrors; past it they cost one more job, the
+        combined probe (_membership_probe). Parse/dedup/seq run on the
+        driver through the SAME pure-Python kernels the pandas UDFs wrap
+        (functions/kernels — fuzz-verified against the compiled reference),
+        sanitized at the same boundary (udfs._san). Link dedup streams with
+        the parse: pages are parsed in seq order, so a canonical's first
+        occurrence is its (parent_seq, link_rank) first-wins winner, and only
+        that occurrence plus a count (for bloom_checked) is kept — never one
+        tuple per extracted link. Each page's HTML is released once it is
+        parsed. Bloom and cuckoo updates go through the batch xxh64 driver
+        twin, bit-identical to the JVM-hashed updates. State increments and
+        the new frontier are ``local_df`` frames — parallelized-RDD leaf
+        plans that need no localCheckpoint pin and that record their rows,
+        so the round's checkpoint is written in-process
         (sources/table_format.ParquetAdapter) with no write job.
         Equivalence with the distributed path is asserted per scenario in
         tests/test_fast_rounds.py, and the goldens/differential fuzz run
         over whichever path the gate picks.
         """
         t0 = time.time()
-        _ph: dict[str, float] = {}
-        _last = [t0]
-
-        def mark(name: str) -> None:
-            now = time.time()
-            _ph[name] = round((now - _last[0]) * 1000, 1)
-            _last[0] = now
-
-        import os as _os
-
-        _detail = _os.environ.get("SPARK_PHASE_DETAIL") == "1"
-
-        def dmark(name: str) -> None:
-            if _detail:
-                mark(name)
+        clock = _PhaseClock(t0)
 
         rows = sorted(self._frontier_rows(), key=lambda r: r[0])  # seq order
 
@@ -891,13 +995,13 @@ class CrawlEngine:
             self._item_parts.append(
                 local_df(self.spark, [], ITEMS_SCHEMA)
             )
-            mark("dequeue_fetch")
+            clock.mark("dequeue_fetch")
             self.metrics.append(
                 RoundMetrics(
                     round=self.round_num, urls_dequeued=0, urls_fetched=0,
                     fetch_misses=0, books_found=0, links_extracted=0,
                     links_new=0, links_dup=0, links_ignored=0,
-                    wall_ms=(time.time() - t0) * 1000, phase_ms=_ph,
+                    wall_ms=(time.time() - t0) * 1000, phase_ms=clock.ms,
                     ts=time.strftime("%Y-%m-%d %H:%M:%S"),
                     fast_path=True,
                 )
@@ -906,22 +1010,8 @@ class CrawlEngine:
             self._write_checkpoint()
             return True
 
-        # --- fetch: job 1 — collect the slice's page-store hits. _pid is
-        # computed with the SAME expression repartition(n, url) places by
-        # (pmod(murmur3(url), n)), so lineage counts match the
-        # distributed parse stage exactly -------------------------------
-        urls = [r[2] for r in slice_rows]
-        hit_rows = (
-            self.pages.filter(F.col("url").isin(urls))
-            .select(
-                "url", "html",
-                F.pmod(F.hash(F.col("url")), F.lit(self.n_part))
-                .cast("int")
-                .alias("_pid"),
-            )
-            .collect()
-        )
-        pages_by_url = {r["url"]: r for r in hit_rows}
+        # --- fetch: job 1 — the slice's page-store hits ------------------
+        pages_by_url = self._fetch_pages([r[2] for r in slice_rows])
 
         # --- max_pages truncation (exclusive prefix-count of hits) ------
         if self.max_pages > 0:
@@ -943,122 +1033,92 @@ class CrawlEngine:
             for r in popped:
                 self._host_last_round[r[4]] = self.round_num
 
-        hits = [r for r in popped if r[2] in pages_by_url]
+        # the parse queue holds the only references to the fetched pages,
+        # so each page's HTML is freed as soon as it is parsed
+        hits = deque(
+            (r[0], r[1], pages_by_url[r[2]])
+            for r in popped
+            if r[2] in pages_by_url
+        )
         n_hits = len(hits)
         if self.record_dequeues:
             for r in popped:
                 self.dequeue_log.append(
                     (self.round_num, r[0], r[1], r[2] in pages_by_url)
                 )
-        mark("dequeue_fetch")
+        del pages_by_url
+        clock.mark("dequeue_fetch")
         self.pages_crawled += n_hits
 
-        # --- parse: the UDF kernels, driver-side, same _san boundary ----
+        # --- parse: the UDF kernels, driver-side, same _san boundary.
+        # Books keep their first (parent_seq, book_rank) occurrence per
+        # canonical; links go scope → robots → canonicalize and keep their
+        # first (parent_seq, link_rank) occurrence per canonical ----------
         _san = U._san
+        base = self.base_url
+        blocked = self._robots_blocked_local()
         part_counts: dict[int, int] = {}
-        pods: list[tuple] = []  # (parent_seq, book_rank, title, price, rating, url, canonical)
-        link_rows: list[tuple] = []  # (parent_seq, link_rank, link)
+        # canonical → (parent_seq, book_rank, title, price, rating, url, canonical)
+        book_winners: dict[str, tuple] = {}
+        # canonical → [parent_seq, link_rank, path, occurrences]
+        link_firsts: dict[str, list] = {}
         n_extracted = 0
         n_ignored = 0
-        for r in hits:
-            seq, path = r[0], r[1]
-            page = pages_by_url[r[2]]
-            pid = page["_pid"]
+        while hits:
+            seq, path, (html, pid) = hits.popleft()
             part_counts[pid] = part_counts.get(pid, 0) + 1
-            html = page["html"]
-            page_url = self.base_url + path
             if html is None:
                 continue
+            page_url = base + path
             raw = bytes(html)
             if K.is_category_page(path):  # == book_parse_gate_expr(path)
                 for rank, bk in enumerate(K.parse_books(raw, page_url)):
                     u = _san(bk.url)
-                    pods.append(
-                        (seq, rank, _san(bk.title), _san(bk.price),
-                         bk.rating, u, K.canonicalize_url(u))
-                    )
-            links = [_san(x) for x in K.extract_all_links(raw, page_url)]
+                    c = K.canonicalize_url(u)
+                    if c not in book_winners:
+                        book_winners[c] = (
+                            seq, rank, _san(bk.title), _san(bk.price),
+                            bk.rating, u, c,
+                        )
+            links = K.extract_all_links(raw, page_url)
             n_extracted += len(links)
-            kept = [x for x in links if not K.should_ignore_url(x)]
-            n_ignored += len(links) - len(kept)
-            for rank, link in enumerate(kept):
-                link_rows.append((seq, rank, link))
-
-        # --- books: within-round first-wins by (parent_seq, book_rank) --
-        book_winners: list[tuple] = []
-        seen_canon_round: set = set()
-        for p in pods:  # pods is already in (parent_seq, book_rank) order
-            if p[6] not in seen_canon_round:
-                seen_canon_round.add(p[6])
-                book_winners.append(p)
-
-        # --- links: scope → robots → canonicalize → bloom pre-filter ----
-        if self.robots_rules is not None and self._robots_local is None:
-            if self._robots_full:
-                # host → [(pattern, allow)] for the pure longest-match
-                # kernel (robots_allowed) — the driver twin of the
-                # distributed robots_allowed_col plan
-                from collections import defaultdict
-
-                by_host: dict = defaultdict(list)
-                for rr in self.robots_rules.collect():
-                    by_host[rr["host"]].append((rr["pattern"], rr["allow"]))
-                self._robots_local = [("__full__", dict(by_host))]
-            else:
-                self._robots_local = [
-                    (rr["host"], rr["prefix"])
-                    for rr in self.robots_rules.collect()
-                ]
-        n_robots_blocked = 0
-        cand_rows: list[tuple] = []  # (parent_seq, link_rank, path, url, canonical)
-        _full_map = (
-            self._robots_local[0][1]
-            if self._robots_full and self._robots_local
-            else None
-        )
-        for parent_seq, link_rank, link in link_rows:
-            if link.startswith(self.base_url):
-                path = link[len(self.base_url):]
-            else:
-                path = link
-            if _full_map is not None:
-                from ..sources.robots import robots_allowed
-
-                if not robots_allowed(
-                    _full_map.get(K.url_host(link), []), path
-                ):
-                    n_robots_blocked += 1
+            rank = 0
+            for link in links:
+                link = _san(link)
+                if K.should_ignore_url(link):
+                    n_ignored += 1
                     continue
-            elif self._robots_local:
-                lhost = K.url_host(link)
-                if any(
-                    lhost == rh and path.startswith(rp)
-                    for rh, rp in self._robots_local
-                ):
-                    n_robots_blocked += 1
+                link_rank = rank
+                rank += 1
+                lpath = link[len(base):] if link.startswith(base) else link
+                if blocked is not None and blocked(link, lpath):
+                    n_ignored += 1  # robots-blocked links count as ignored
                     continue
-            cand_rows.append(
-                (parent_seq, link_rank, path, self.base_url + path,
-                 K.canonicalize_url(link))
-            )
-        n_ignored += n_robots_blocked
+                canon = K.canonicalize_url(link)
+                first = link_firsts.get(canon)
+                if first is None:
+                    link_firsts[canon] = [seq, link_rank, lpath, 1]
+                else:
+                    first[3] += 1
 
+        # --- bloom pre-filter over the distinct candidates; a flagged
+        # canonical counts once per occurrence, as the distributed probe
+        # counts rows ----------------------------------------------------
         n_bloom_checked = -1
         if self.use_bloom:
             self._bloom_ensure()
-            flags = self._bloom_probe_local([c[4] for c in cand_rows])
-            n_bloom_checked = int(flags.sum()) if len(cand_rows) else 0
-            maybe_canons = {
-                c[4] for c, f in zip(cand_rows, flags) if bool(f)
-            }
+            canons = list(link_firsts)
+            flags = self._bloom_probe_local(canons)
+            maybe_canons = [c for c, f in zip(canons, flags) if f]
+            n_bloom_checked = sum(link_firsts[c][3] for c in maybe_canons)
         else:
-            maybe_canons = {c[4] for c in cand_rows}
-        dmark("f.parse_py")
+            maybe_canons = list(link_firsts)
+        clock.dmark("f.parse_py")
 
         # --- exact membership for both flows: set lookups against the
         # driver mirrors when live (zero jobs — the common fast-round
         # case), else ONE combined probe job ----------------------------
-        book_canons = sorted({w[6] for w in book_winners})
+        book_canons = sorted(book_winners)
         if self._seen_mirror is not None:  # both mirrors live or both dead
             found_seen = {c for c in maybe_canons if c in self._seen_mirror}
             found_items = {
@@ -1068,11 +1128,11 @@ class CrawlEngine:
             found_seen, found_items = self._membership_probe(
                 sorted(maybe_canons), book_canons
             )
-        dmark("f.probe_job")
+        clock.dmark("f.probe_job")
 
         # --- items: drop already-known canonicals, stamp item_seq -------
         item_rows = []
-        for w in book_winners:
+        for w in book_winners.values():
             if w[6] in found_items:
                 continue
             parent_seq, rank, title, price, rating, url, canon = w
@@ -1095,26 +1155,26 @@ class CrawlEngine:
         self._item_parts.append(new_items)
         self.items = self.items.unionByName(new_items)
         self.items_count += new_item_count
-        mark("parse_books")
+        clock.mark("parse_books")
 
-        # --- links: first-wins per canonical, drop seen, stamp seq ------
-        mark("extract_links")
+        # --- links: drop seen first occurrences, stamp seq ---------------
+        clock.mark("extract_links")
         new_frontier_rows: list[tuple] = []
         new_seen_rows: list[tuple] = []
-        taken_canon: set = set()
-        for parent_seq, link_rank, path, url, canon in cand_rows:
-            if canon in taken_canon or canon in found_seen:
+        for canon, (parent_seq, link_rank, path, _n) in link_firsts.items():
+            if canon in found_seen:
                 continue
-            taken_canon.add(canon)
             s = self.next_seq + len(new_frontier_rows)
+            url = base + path
             new_frontier_rows.append(
                 (s, path, url, canon, K.url_host(url), parent_seq,
                  link_rank, self.round_num + 1, 0)
             )
             new_seen_rows.append((canon, s, self.round_num + 1))
+        del link_firsts
         n_new = len(new_frontier_rows)
         self.next_seq += n_new
-        mark("dedup_seq")
+        clock.mark("dedup_seq")
 
         popped_seqs = {r[0] for r in popped}
         if n_popped == self.frontier_size:
@@ -1136,7 +1196,7 @@ class CrawlEngine:
             self._seen_mirror.update(c for (c, _s, _r) in new_seen_rows)
         if self.use_bloom and n_new:
             self._bloom_add_local([c for (c, _s, _r) in new_seen_rows])
-        mark("state_update")
+        clock.mark("state_update")
 
         self.metrics.append(
             RoundMetrics(
@@ -1151,7 +1211,7 @@ class CrawlEngine:
                 links_ignored=n_ignored,
                 wall_ms=(time.time() - t0) * 1000,
                 partition_fetch_counts=part_counts,
-                phase_ms=_ph,
+                phase_ms=clock.ms,
                 ts=time.strftime("%Y-%m-%d %H:%M:%S"),
                 bloom_checked=n_bloom_checked,
                 fast_path=True,
@@ -1178,24 +1238,8 @@ class CrawlEngine:
         if self._fast_eligible():
             return self._run_round_fast()
         t0 = time.time()
-        _ph: dict[str, float] = {}
-        _last = [t0]
-
-        def mark(name: str) -> None:
-            now = time.time()
-            _ph[name] = round((now - _last[0]) * 1000, 1)
-            _last[0] = now
-
-        # profiling-only sub-marks (SPARK_PHASE_DETAIL=1): split the coarse
-        # phases at each materialization boundary; off by default so the
-        # bench phase tables keep their stable 5-phase shape
-        import os as _os
-
-        _detail = _os.environ.get("SPARK_PHASE_DETAIL") == "1"
-
-        def dmark(name: str) -> None:
-            if _detail:
-                mark(name)
+        clock = _PhaseClock(t0)
+        mark, dmark, _ph = clock.mark, clock.dmark, clock.ms
 
         # --- dequeue under per-host politeness budget (Q2/Q8) -------------
         # per-host rank via the two-phase grouped prefix-count (plans/seq.py):
@@ -1559,6 +1603,8 @@ class CrawlEngine:
         # stays on the MAIN thread after .result(), so per-round
         # ordering and determinism are unchanged.
         def _books_flow():
+            # this thread's own clock: the main thread marks concurrently
+            bclock = _PhaseClock(time.time())
             if n_books_upper == 0:
                 # bookless round (every fetched page failed the parse gate —
                 # the common case for detail-page rounds): the stats agg above
@@ -1663,7 +1709,7 @@ class CrawlEngine:
                     )
                     .collect()
                 )
-                dmark("b.narrow_stats")
+                bclock.dmark("b.narrow_stats")
                 bucket_counts = {
                     r["_bkt"]: r["surv"] for r in bstats if r["surv"] > 0
                 }
@@ -1735,8 +1781,8 @@ class CrawlEngine:
                         seq_col="item_seq", n_partitions=self.n_part,
                     )
                     new_items = self._pin(stamped.select(*item_cols))
-                dmark("b.final_pin")
-            return new_items, new_item_count
+                bclock.dmark("b.final_pin")
+            return new_items, new_item_count, bclock.ms
 
         books_fut = _round_pool.submit(_books_flow)
 
@@ -1810,8 +1856,9 @@ class CrawlEngine:
 
         # join the concurrent books flow; mutate items state on the
         # main thread (same effect/order as the old serial code)
-        new_items, new_item_count = books_fut.result()
+        new_items, new_item_count, books_ms = books_fut.result()
         _round_pool.shutdown()
+        _ph.update(books_ms)
         self._item_parts.append(new_items)
         self.items = self.items.unionByName(new_items)  # lazy over pinned parts
         self.items_count += new_item_count

@@ -16,7 +16,10 @@ from __future__ import annotations
 import random
 import string
 
+import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from distributed_web_scrapper_and_crawler_c__spark.functions import xxh64 as XX
@@ -177,9 +180,14 @@ def test_checkpoint_cross_path_resume(spark, pages, tmp_path):
 def test_xxh64_matches_spark_expression(spark):
     """The driver twin must be bit-equal to F.xxhash64 for every form the
     seen-filters use: bare string (bloom h1), string+int-literal chains
-    (bloom h2 seed 1, cuckoo FP_SEED 3 / IX_SEED 4)."""
+    (bloom h2 seed 1, cuckoo FP_SEED 3 / IX_SEED 4) — both the scalar
+    reference and the batch form. Byte lengths cross XXH64's 4-, 8- and
+    32-byte steps in 1- to 4-byte UTF-8, and the batch spans more than
+    one block."""
     rng = random.Random(20260818)
     strs = ["", "a", "é中文", "x" * 31, "y" * 32, "z" * 100]
+    for ch in ("a", "é", "中", "😀"):
+        strs += [ch * n for n in range(1, 72 // len(ch.encode()))]
     for _ in range(300):
         n = rng.randrange(0, 90)
         strs.append(
@@ -192,6 +200,8 @@ def test_xxh64_matches_spark_expression(spark):
                 for _ in range(rng.randrange(0, 40))
             )
         )
+    while len(strs) <= XX._BLOCK:
+        strs.append(f"http://h/{len(strs)}/" + "p" * (len(strs) % 50))
     df = spark.createDataFrame([(s,) for s in strs], "s string")
     rows = df.select(
         F.xxhash64("s").alias("h0"),
@@ -205,3 +215,56 @@ def test_xxh64_matches_spark_expression(spark):
         assert XX.spark_xxhash64_str(s, 1) == r["h1"] & mask
         assert XX.spark_xxhash64_str(s, 3) == r["h3"] & mask
         assert XX.spark_xxhash64_str(s, 4) == r["h4"] & mask
+    for children, col in (((), "h0"), ((1,), "h1"), ((3,), "h3"), ((4,), "h4")):
+        batch = XX.hash_str_array(strs, *children)
+        assert batch.dtype == np.uint64
+        assert [int(h) for h in batch] == [r[col] & mask for r in rows], col
+        assert XX.hash_str_array([], *children).shape == (0,)
+
+
+# URL pieces the fetch's SQL string literals must quote: quotes,
+# backslashes, line breaks, %-escapes, ${...} (the parser's variable
+# substitution; spark.app.name is always set), non-ASCII and NUL
+_URL_PIECES = st.sampled_from(
+    ["'", "\\", "\\'", "\n", "\r\n", "%27", "%5C", "${a}",
+     "${spark.app.name}", "$", "{", "é", "中文", "😀", "\x00", "/", "?q=1",
+     "--", "/*", " "]
+)
+_URL_TEXT = st.lists(
+    _URL_PIECES | st.text(st.characters(blacklist_categories=("Cs",)),
+                          max_size=4),
+    max_size=6,
+).map("".join)
+
+
+@pytest.mark.parametrize("escaped_literals", ["false", "true"])
+@settings(max_examples=30, deadline=None)
+@given(
+    stored=st.lists(_URL_TEXT, min_size=1, max_size=8, unique=True),
+    picks=st.lists(st.integers(0, 7), max_size=8),
+    absent=st.lists(_URL_TEXT, max_size=3),
+)
+@example(stored=["${spark.app.name}", "a'b\\"], picks=[0, 1], absent=["x"])
+def test_fetch_selects_what_isin_selects(
+    spark, escaped_literals, stored, picks, absent
+):
+    """The fast round's one-call fetch (an SQL IN-list of quoted literals)
+    selects exactly the page-store rows ``Column.isin`` selects, also when
+    the session parses string literals verbatim."""
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped_literals)
+    urls = ["http://h/" + u for u in stored]
+    store = spark.createDataFrame(
+        [(u, u.encode("utf-8")) for u in urls], "url string, html binary"
+    )
+    eng = CrawlEngine(spark, store, num_partitions=2)
+    wanted = [urls[i % len(urls)] for i in picks] + [
+        "http://h/" + u for u in absent
+    ]
+    try:
+        got = eng._fetch_pages(wanted)
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+    want = {r["url"] for r in store.filter(F.col("url").isin(wanted)).collect()}
+    assert set(got) == want
+    for u, (html, _pid) in got.items():
+        assert bytes(html) == u.encode("utf-8")

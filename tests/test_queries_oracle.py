@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from distributed_web_scrapper_and_crawler_c__spark.operators import dedup as DD
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -87,3 +88,16 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"rating", "n_books", "avg_price"} <= set(df.columns)
+
+
+def test_near_dup_pipeline_threshold_zero_matches_oracle(spark, ddb):
+    """At threshold 0 every LSH candidate pair is an edge. The oracle's
+    shared-shingle self-join never pairs disjoint documents, so this holds
+    only while no candidate pair is disjoint (equal band values imply a
+    shared minimizing shingle)."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    got = normalize(DD.near_dup_pipeline(docs, threshold=0).toPandas())
+    want = normalize(ddb.execute(DD.near_dup_pipeline_sql(0)).df())
+    assert len(got) == len(want)
+    assert (got[["doc_a", "doc_b"]].values == want[["doc_a", "doc_b"]].values).all()
+    assert np.allclose(got["jaccard"], want["jaccard"], atol=1e-6)

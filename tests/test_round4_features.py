@@ -365,6 +365,29 @@ def test_books_scale_path_trouble_fallback(spark, pages, pages_map, monkeypatch)
     _assert_books_match_oracle(eng, crawl_oracle.crawl(pages_map))
 
 
+def test_books_flow_phase_marks_on_own_clock(spark, pages, monkeypatch):
+    """The books flow runs on a pool thread. Its SPARK_PHASE_DETAIL marks
+    go to that thread's own clock and are merged after the flow is joined,
+    so they never move the main thread's clock. With the narrow-stats
+    branch forced, every b.* mark is recorded and no phase wall is
+    negative."""
+    from distributed_web_scrapper_and_crawler_c__spark.plans import seq as seq_mod
+
+    monkeypatch.setenv("SPARK_PHASE_DETAIL", "1")
+    monkeypatch.setattr(seq_mod, "SMALL_SEQ_ROWS", 1)
+    eng = CrawlEngine(spark, pages, fast_round_rows=0)
+    eng.run("/catalogue/page-1.html", max_rounds=2)
+    main = {"dequeue_fetch", "extract_links", "dedup_seq", "parse_books",
+            "state_update", "d.parse_pin", "d.stats_agg", "s.seq_pin"}
+    books = {"b.narrow_stats", "b.final_pin"}
+    assert eng.round_num == 2
+    for m in eng.metrics:
+        assert not m.fast_path
+        assert main <= set(m.phase_ms), m.phase_ms
+        assert all(v >= 0 for v in m.phase_ms.values()), m.phase_ms
+    assert books <= set(eng.metrics[0].phase_ms), eng.metrics[0].phase_ms
+
+
 def test_pin_storage_level_serialized(spark, pages, pages_map, monkeypatch):
     """pin_storage_level reroutes every _pin through the requested level
     (serialized pins for memory-tight executors) with identical results.
